@@ -108,7 +108,11 @@ def token_pair_upper_bound_py(t: str, u: str) -> float:
         if t[k] != u[k]:
             break
         p += 1
-    return 1.0 - (1.0 - j) * (1.0 - 0.1 * p)
+    # the kernel's own operation order (similarity.jaro_winkler_py): the
+    # algebraically equal 1 - (1-j)(1-0.1p) rounds differently and can land
+    # one ulp below the kernel, e.g. 0.8999999999999999 vs 0.9 — across
+    # name_align's 0.9 weakest-link boundary ('aecd' / 'aecaada')
+    return j + p * 0.1 * (1.0 - j)
 
 
 def make_na_upper_bound_vectorized():
@@ -257,11 +261,16 @@ def make_na_upper_bound_vectorized():
         factorize path above is the same codes/uniques by construction."""
         n = len(codes1)
         out = np.zeros(n, dtype=np.float64)  # zero-token rows stay 0.0
-        map1 = np.fromiter((info_id(u) for u in uniq1), np.int64, len(uniq1))
-        map2 = np.fromiter((info_id(u) for u in uniq2), np.int64, len(uniq2))
         empty_id = info_id("")  # encode sentinels (<0) are None names
-        ia = np.where(codes1 >= 0, map1[codes1], empty_id)
-        ib = np.where(codes2 >= 0, map2[codes2], empty_id)
+
+        def ids(codes, uniq):
+            # the empty-name id rides at the END of the map, so the null
+            # sentinel -1 indexes it — also when every name is null and
+            # ``uniq`` is empty
+            m = np.fromiter((info_id(u) for u in uniq), np.int64, len(uniq))
+            return np.append(m, empty_id)[codes]
+
+        ia, ib = ids(codes1, uniq1), ids(codes2, uniq2)
         # scalar-fallback rows need the actual strings back (bounded: only
         # rows whose structure the dense path cannot represent)
         def name_at(codes, uniq, k):
@@ -329,7 +338,7 @@ def make_na_upper_bound_vectorized():
             run &= eqc[:, col]
             prefix_len += run
         p = np.minimum(np.minimum(prefix_len, 4), np.minimum(lt_t, lt_u))
-        w = 1.0 - (1.0 - j) * (1.0 - 0.1 * p)
+        w = j + p * 0.1 * (1.0 - j)  # kernel op order (see na_upper_bound_py)
         s = np.where(j <= 0.7, j, w)
         s = np.where(inter == 0, 0.0, s)
         single = (lt_t == 1) | (lt_u == 1)

@@ -616,10 +616,11 @@ def make_scoring_batteries_arrow_udf(cutoff: float):
         return codes.astype(np.int64, copy=False), enc.dictionary.to_pylist()
 
     def fn(s1, s2, tlr, wc, boost):
-        if isinstance(s1, pa.ChunkedArray):  # defensive: combine per-batch
-            s1, s2, tlr, wc, boost = (
-                x.combine_chunks() for x in (s1, s2, tlr, wc, boost)
-            )
+        # defensive: combine per argument — any of them may arrive chunked
+        s1, s2, tlr, wc, boost = (
+            x.combine_chunks() if isinstance(x, pa.ChunkedArray) else x
+            for x in (s1, s2, tlr, wc, boost)
+        )
         n = len(s1)
         codes1, uniq1 = _codes_uniq(s1)
         codes2, uniq2 = _codes_uniq(s2)

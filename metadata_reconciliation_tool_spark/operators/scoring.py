@@ -70,35 +70,6 @@ def cap_persisted_scores(
     )
 
 
-def attach_names(
-    pairs: DataFrame,
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str = "entity_key",
-    right_id: str = "entity_key",
-    left_name: str = "norm_name",
-    right_name: str = "norm_name",
-    right_description: str | None = None,
-) -> DataFrame:
-    """Join pair ids to their normalized names (+ optional description).
-
-    The right side is broadcast when it is the authority dictionary; for
-    entity↔entity pairs both joins shuffle on the key — unavoidable and
-    linear in pair count.
-    """
-    l = left.select(
-        F.col(left_id).alias("left_key"), F.col(left_name).alias("left_name")
-    )
-    rcols = [F.col(right_id).alias("right_key"), F.col(right_name).alias("right_name")]
-    if right_description:
-        rcols.append(F.col(right_description).alias("right_description"))
-    r = right.select(*rcols)
-    out = pairs.join(l, "left_key").join(r, "right_key")
-    if not right_description:
-        out = out.withColumn("right_description", F.lit(None).cast("string"))
-    return out
-
-
 def score_pairs(
     named_pairs: DataFrame,
     threshold: float = DEFAULT_MATCH_THRESHOLD,

@@ -7,11 +7,14 @@ NEW batch against the existing checkpointed state:
 1. extract + normalize the new batch; anti-join against the existing
    distinct-entities table → only genuinely unseen entity keys proceed
    (the md5 key makes "seen" exact);
-2. block the new entities against (a) the broadcast dictionary and (b) the
-   corpus via :func:`blocking.asymmetric_candidates` — new↔old and new↔new
-   pairs only; old↔old pairs are never *materialized* (the corpus side is
-   semi-joined down to blocks the batch touches before any pair is built,
-   so per-batch cost scales with the batch, not the corpus);
+2. block the new entities with the bootstrap's own blocking plan
+   (:func:`.pipeline.build_candidate_pairs`: the same dictionary gate,
+   dictionary join and entity-pair body) against (a) the dictionary and
+   (b) the corpus via :func:`blocking.asymmetric_candidates` — exactly the
+   full run's new↔old and new↔new pairs; old↔old pairs are never
+   *materialized* (the corpus is semi-joined down to the blocks the batch
+   emits before any pair is built, so per-batch cost scales with the
+   batch, not the corpus);
 3. score only the new pairs (same fused-UDF scorer);
 4. append to state ATOMICALLY: each batch writes its rows under
    ``batches/<batch_id>/{entities_distinct,scoring,best}`` (``best`` = the
@@ -52,12 +55,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.persist import materialize
 from ..operators import blocking as B
 from ..operators import clustering as C
 from ..operators import extract as E
 from ..operators import scoring as S
 from ..sources import statefs as StateFS
 from ..sources import writers as W
+from . import pipeline as P
 
 COMMIT_MARKER = "_COMMITTED"
 
@@ -133,13 +138,8 @@ class IncrementalRecon:
         )
         self.max_block_size = max_block_size
         self.auto_compact_every = auto_compact_every
-        # bounded-probe results for the dictionary broadcast gate, keyed by
-        # the dictionary plan's semanticHash (ADVICE r4 low: the former
-        # per-instance bool assumed "the dictionary is stable" by comment
-        # only — an ingest called with a DIFFERENT, larger dictionary reused
-        # a stale broadcast=True verdict and could broadcast a >2M-row
-        # exploded key frame). Same plan → cached verdict; a changed
-        # dictionary re-probes.
+        # dictionary broadcast-gate verdicts (blocking.dict_broadcast_gate):
+        # one probe per distinct dictionary plan, not one per ingest
         self._dict_broadcast: dict[int, bool] = {}
 
     def _read_job_config(self) -> dict:
@@ -460,38 +460,20 @@ class IncrementalRecon:
             old_distinct.select("entity_key"), "entity_key", "left_anti"
         )
 
-        nkeyed = B.add_block_keys(new_distinct)
-        dprep = E.prepare_dictionary(dictionary)
-        # new ↔ dictionary; the broadcast-gate probe runs once per DISTINCT
-        # dictionary plan, not once per ingest — the common stable-dictionary
-        # job pays one probe, a swapped dictionary re-probes (ADVICE r4 low).
-        # Probed on the PREPARED frame (pre-keys): add_block_keys is a
-        # row-preserving projection, so the count gate is identical to the
-        # former keyed-frame probe while skipping its per-row UDF work.
-        dict_id = dictionary.semanticHash()
-        if dict_id not in self._dict_broadcast:
-            self._dict_broadcast[dict_id] = (
-                dprep.limit(B.DICT_BROADCAST_MAX_ROWS + 1).count()
-                <= B.DICT_BROADCAST_MAX_ROWS
-            )
-        if self._dict_broadcast[dict_id]:
-            # same single-task pathology/fix as ReconPipeline.blocking: the
-            # A3 window's tiny shuffle AQE-coalesces to one partition and
-            # the key UDFs serialize; the explicit repartition fans them
-            # out, gated on the broadcast verdict
-            dprep = dprep.repartition(spark.sparkContext.defaultParallelism)
-        dkeyed = B.add_block_keys(dprep, "norm_label")
-        dict_pairs = B.dictionary_candidates(
-            nkeyed, dkeyed, broadcast=self._dict_broadcast[dict_id]
-        ).withColumn("pair_kind", F.lit("dict"))
-        # new ↔ (old ∪ new), old↔old never materialized
-        all_keyed = B.add_block_keys(old_distinct).unionByName(nkeyed)
-        touching_new, _dropped = B.asymmetric_candidates(
-            nkeyed, all_keyed, self.max_block_size
-        )
-        new_pairs = dict_pairs.unionByName(
-            touching_new.withColumn("pair_kind", F.lit("self")),
-            allowMissingColumns=True,
+        # materialize the batch's keyed frame ONCE (batch-scaled, like the
+        # bootstrap's keyed entity frame): the dictionary join, the
+        # broadcast-gate probe and the entity-pair body (block list, probe
+        # flags, corpus union) all read it, and every read of the lazy
+        # frame re-ran the batch's extraction and key UDFs
+        nkeyed = materialize(B.add_block_keys(new_distinct))
+        # new ↔ dictionary ∪ new ↔ (old ∪ new), old↔old never materialized
+        new_pairs, _dropped = P.build_candidate_pairs(
+            nkeyed,
+            dictionary,
+            self._dict_broadcast,
+            self.max_block_size,
+            B.DICT_BROADCAST_MAX_ROWS,
+            corpus_keyed=B.add_block_keys(old_distinct).unionByName(nkeyed),
         )
         new_scores = S.cap_persisted_scores(
             S.score_pairs(
@@ -517,16 +499,16 @@ class IncrementalRecon:
         # just-written parquet (NOT the lazy plans — that would re-run the
         # fused scoring UDF a second time), same shared plan + label gate
         # as the bootstrap stage (build_best_matches).
-        from .pipeline import build_best_matches
-
-        batch_best = build_best_matches(
+        batch_best = P.build_best_matches(
             spark.read.parquet(os.path.join(bdir, "entities_distinct")),
             spark.read.parquet(os.path.join(bdir, "scoring")).filter(
                 F.col("pair_kind") == "dict"
             ),
             dictionary,
             self.success_threshold,
-            self._dict_broadcast[dict_id],
+            B.dict_broadcast_gate(
+                dictionary, B.DICT_BROADCAST_MAX_ROWS, self._dict_broadcast
+            ),
         )
         batch_best.write.mode("overwrite").parquet(os.path.join(bdir, "best"))
         # ingest sequence for latest-wins overlay resolution, persisted
@@ -649,8 +631,6 @@ class IncrementalRecon:
             # overlay resolution per reference — and the overlay files of
             # an already-written delta must never be an input of the write
             # that replaces them (the reflect-sidecar heal path)
-            from ..functions.persist import materialize
-
             members = materialize(prior.join(touched_cids, "cluster_id", "semi"))
             stars = members.filter(
                 F.col("entity_key") != F.col("cluster_id")

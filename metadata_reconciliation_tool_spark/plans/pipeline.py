@@ -10,9 +10,9 @@ previous stage's table). Stuck-job recovery (ST3, reset_stuck_jobs.py:17-40)
 becomes a no-op by design.
 
 Stages:
-    entities          extract + normalize + key                (stage_entities)
+    entities          extract + normalize + key                (fused into entities_distinct)
     entities_distinct dedup-before-compute                     (stage_entities_distinct)
-    blocking          multi-pass pairs, dict+self unioned      (stage_blocking)
+    blocking          multi-pass pairs, dict+self unioned      (fused into scoring)
     scoring           batteries + composite + bands, one pass  (stage_scoring)
     clusters          CC over matched entity-entity pairs      (stage_clusters)
     best              rank-1 dictionary match per entity       (stage_best)
@@ -53,19 +53,6 @@ class ReconConfig:
     broadcast_max_rows: int = B.DICT_BROADCAST_MAX_ROWS
     force: bool = False  # recompute even if stage outputs exist
     collect_metrics: bool = True  # per-stage row counts cost one extra job each
-    # blocking's ONLY consumer is scoring, so by default the candidate pairs
-    # are FUSED into the scoring stage (Catalyst pipelines the join straight
-    # into the scoring projection) instead of being checkpointed — writing
-    # and re-reading a pair table as large as the scoring output buys no
-    # reuse, only a resume point in the middle of one logical step. Set True
-    # to restore the round-2 behavior (finer resume granularity for
-    # debugging: a crash during scoring resumes from materialized pairs).
-    checkpoint_blocking: bool = False
-    # same fusion for the raw entities stage (round-3 verdict item 7, serial
-    # floor): its only consumer is entities_distinct, so by default extract
-    # + distinct run as ONE stage write instead of two (a crash recomputes
-    # the extraction — deterministic). Set True for the finer resume point.
-    checkpoint_entities: bool = False
     # persisted-scores policy (round-4 verdict item 5, operators/scoring.py
     # cap_persisted_scores): pruned self rows are dropped (no consumer),
     # pruned dict rows capped at top_k per entity (the reference's own
@@ -73,6 +60,73 @@ class ReconConfig:
     # filters pruned rows out anyway. Set True to persist all 34M rows
     # (pre-round-5 behavior) for forensic debugging.
     persist_all_pruned: bool = False
+
+
+def build_candidate_pairs(
+    keyed: DataFrame,
+    dictionary: DataFrame,
+    gate_cache: dict[int, bool],
+    max_block_size: int,
+    broadcast_max_rows: int,
+    corpus_keyed: DataFrame | None = None,
+    entity_rows: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The blocking plan shared by the bootstrap run and the per-batch
+    incremental delta: entity↔dictionary pairs (``pair_kind='dict'``) ∪
+    entity↔entity pairs (``'self'``) in one frame, so scoring makes one
+    pass over both.
+
+    ``keyed`` is the block-keyed entity frame to reconcile. With
+    ``corpus_keyed=None`` it is the whole corpus and pairs with itself
+    (:func:`~..operators.blocking.self_candidates`); otherwise it is a new
+    batch, ``corpus_keyed`` ⊇ it is the corpus, and only pairs touching the
+    batch are built (:func:`~..operators.blocking.asymmetric_candidates`).
+    ``entity_rows`` (the caller-observed row count of ``keyed``, if known)
+    feeds the broadcast path's pair-task balance and the salt-map gates
+    without probe jobs. Returns (pairs, dropped_blocks_metrics)."""
+    dict_small = B.dict_broadcast_gate(dictionary, broadcast_max_rows, gate_cache)
+    # multi-source union semantics: default source + per-(norm_label,
+    # source) A3 dedup (reconciliation_engine.py:388-437)
+    dprep = E.prepare_dictionary(dictionary)
+    if dict_small:
+        # the A3 dedup window shuffles the dictionary, AQE coalesces the
+        # (small) shuffle to ONE partition, and add_block_keys' two pandas
+        # UDFs then run single-threaded — a measured ~2.4 s single-task job
+        # on every run at every core count (round 6, the pipeline's largest
+        # fixed serial slice). An explicit-count repartition (explicit so
+        # AQE cannot re-coalesce it) fans the UDF work out; gated on the
+        # broadcast verdict so a huge dictionary — whose shuffle AQE
+        # already sizes properly — never pays an extra shuffle.
+        dprep = dprep.repartition(
+            dictionary.sparkSession.sparkContext.defaultParallelism
+        )
+    dict_pairs = B.dictionary_candidates(
+        keyed,
+        B.add_block_keys(dprep, "norm_label"),
+        broadcast=dict_small,
+        entity_rows=entity_rows,
+    )
+    if corpus_keyed is None:
+        entity_pairs, dropped = B.self_candidates(
+            keyed,
+            max_block_size,
+            broadcast_max_rows=broadcast_max_rows,
+            entity_rows=entity_rows,
+        )
+    else:
+        entity_pairs, dropped = B.asymmetric_candidates(
+            keyed,
+            corpus_keyed,
+            max_block_size,
+            broadcast_max_rows=broadcast_max_rows,
+            batch_rows=entity_rows,
+        )
+    # entity pairs carry no source metadata → nulls (boost nothing)
+    pairs = dict_pairs.withColumn("pair_kind", F.lit("dict")).unionByName(
+        entity_pairs.withColumn("pair_kind", F.lit("self")),
+        allowMissingColumns=True,
+    )
+    return pairs, dropped
 
 
 def build_best_matches(
@@ -126,7 +180,8 @@ class ReconPipeline:
         # (sources/statefs.py; round-4 verdict item 6)
         self.fs = fs if fs is not None else StateFS.LocalStateFS()
         self._metrics_rows: list[tuple[str, str, str, float]] = []
-        self._dict_small_cache: bool | None = None
+        # dictionary broadcast-gate verdicts (blocking.dict_broadcast_gate)
+        self._dict_broadcast: dict[int, bool] = {}
         # wall seconds per computed stage (resume read-backs not recorded) —
         # free observability: no extra Spark jobs, just driver-side clocks
         self.stage_walls: dict[str, float] = {}
@@ -140,17 +195,6 @@ class ReconPipeline:
         self.scoring_stats: dict[str, int | None] = {}
 
     # -- stage plumbing ------------------------------------------------------
-
-    def _dict_small(self, dictionary: DataFrame) -> bool:
-        """One bounded broadcast-gate probe per pipeline instance (the scan
-        stops at ``broadcast_max_rows + 1`` rows): blocking and best-match
-        share the verdict instead of each paying a probe job. The ±1-row
-        difference vs probing the deduped keyed frame is irrelevant — the
-        gate is an order-of-magnitude safety bound, not an exact budget."""
-        if self._dict_small_cache is None:
-            gate = self.cfg.broadcast_max_rows
-            self._dict_small_cache = dictionary.limit(gate + 1).count() <= gate
-        return self._dict_small_cache
 
     def _path(self, stage: str) -> str:
         return os.path.join(self.cfg.work_dir, self.cfg.job_id, f"stage_{stage}")
@@ -208,14 +252,11 @@ class ReconPipeline:
     # -- stages --------------------------------------------------------------
 
     def entities(self, transcripts: DataFrame) -> DataFrame:
-        """Extract + normalize + key. Fused into entities_distinct by
-        default (``checkpoint_entities=False``): distinct is its only
-        consumer, so the raw per-mention frame is returned lazy and the
-        distinct stage's write materializes both in one job."""
-        if self.cfg.checkpoint_entities:
-            return self._run_stage(
-                "entities", lambda: E.extract_entities(transcripts)
-            )
+        """Extract + normalize + key, fused into entities_distinct (round-3
+        verdict item 7, serial floor): distinct is its only consumer, so
+        the raw per-mention frame is returned lazy and the distinct stage's
+        write materializes both in one job (a crash recomputes the
+        extraction — deterministic)."""
         return E.extract_entities(transcripts)
 
     def entities_distinct(self, entities: DataFrame) -> DataFrame:
@@ -227,17 +268,15 @@ class ReconPipeline:
         )
 
     def blocking(self, distinct: DataFrame, dictionary: DataFrame) -> DataFrame:
-        """One pass for BOTH pair kinds: entity↔dictionary (pair_kind=
-        'dict') and entity↔entity ('self'), so scoring makes one pass over
-        all pairs.
+        """One pass for BOTH pair kinds (:func:`build_candidate_pairs`), so
+        scoring makes one pass over all pairs.
 
-        By default (``checkpoint_blocking=False``) the pair frame is
-        returned LAZY and fused into the scoring stage: blocking's only
-        consumer is scoring, so checkpointing a pair table as large as the
-        scoring output just pays a full write + re-read for a mid-step
-        resume point (measured ~20 s of the sf0.1 pipeline wall). Resume
-        still works — a crash during scoring reruns blocking as part of the
-        scoring recompute, deterministically."""
+        The pair frame is returned LAZY and fused into the scoring stage:
+        blocking's only consumer is scoring, so checkpointing a pair table
+        as large as the scoring output just pays a full write + re-read for
+        a mid-step resume point (measured ~20 s of the sf0.1 pipeline
+        wall). Resume still works — a crash during scoring reruns blocking
+        as part of the scoring recompute, deterministically."""
         from ..functions.persist import materialize
 
         # materialize the keyed entity frame ONCE (round 6, measured
@@ -250,53 +289,19 @@ class ReconPipeline:
         # already checkpoints — so the boundary is scale-safe wherever fk
         # is (functions/persist.materialize's documented trade).
         ekeyed = materialize(B.add_block_keys(distinct))
-
-        def compute():
-            # multi-source union semantics: default source + per-(norm_label,
-            # source) A3 dedup (reconciliation_engine.py:388-437)
-            dprep = E.prepare_dictionary(dictionary)
-            dict_small = self._dict_small(dictionary)
-            if dict_small:
-                # the A3 dedup window shuffles the dictionary, AQE coalesces
-                # the (small) shuffle to ONE partition, and add_block_keys'
-                # two pandas UDFs then run single-threaded — a measured
-                # ~2.4 s single-task job on every run at every core count
-                # (round 6, the pipeline's largest fixed serial slice). An
-                # explicit-count repartition (explicit so AQE cannot
-                # re-coalesce it) fans the UDF work out; gated on the
-                # broadcast verdict so a huge dictionary — whose shuffle AQE
-                # already sizes properly — never pays an extra shuffle.
-                dprep = dprep.repartition(
-                    self.spark.sparkContext.defaultParallelism
-                )
-            dkeyed = B.add_block_keys(dprep, "norm_label")
-            dict_pairs = B.dictionary_candidates(
-                ekeyed,
-                dkeyed,
-                broadcast=dict_small,
-                # observed on the distinct stage write — feeds the
-                # broadcast path's pair-task balance gate without a probe
-                entity_rows=self.stage_rows.get("entities_distinct"),
-            ).withColumn("pair_kind", F.lit("dict"))
-            self_pairs, dropped = B.self_candidates(
-                ekeyed,
-                self.cfg.max_block_size,
-                broadcast_max_rows=self.cfg.broadcast_max_rows,
-                entity_rows=self.stage_rows.get("entities_distinct"),
-            )
-            if self.cfg.collect_metrics:
-                self._metric(
-                    "blocking", "oversized_blocks_dropped", float(dropped.count())
-                )
-            # self pairs carry no source metadata → nulls (boost nothing)
-            return dict_pairs.unionByName(
-                self_pairs.withColumn("pair_kind", F.lit("self")),
-                allowMissingColumns=True,
-            )
-
-        if self.cfg.checkpoint_blocking:
-            return self._run_stage("blocking", compute)
-        return compute()
+        pairs, dropped = build_candidate_pairs(
+            ekeyed,
+            dictionary,
+            self._dict_broadcast,
+            self.cfg.max_block_size,
+            self.cfg.broadcast_max_rows,
+            # observed on the distinct stage write — feeds the broadcast
+            # gates and the pair-task balance without probe jobs
+            entity_rows=self.stage_rows.get("entities_distinct"),
+        )
+        if self.cfg.collect_metrics:
+            self._metric("blocking", "oversized_blocks_dropped", float(dropped.count()))
+        return pairs
 
     def scoring(
         self,
@@ -411,7 +416,9 @@ class ReconPipeline:
                 dict_scores,
                 dictionary,
                 self.cfg.success_threshold,
-                self._dict_small(dictionary),
+                B.dict_broadcast_gate(
+                    dictionary, self.cfg.broadcast_max_rows, self._dict_broadcast
+                ),
             )
 
         return self._run_stage("best", compute)

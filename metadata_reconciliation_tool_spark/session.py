@@ -18,6 +18,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half the host's
+    physical RAM, capped at 48g. A fixed 48g heap on a 16 GB host let the
+    JVM grow until the kernel OOM-killed it; the local-mode driver shares
+    the host with the Python workers and the page cache."""
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{max(512, min(48 * 1024, phys // 2 // 2**20))}m"
+
+
 def build_session(
     app_name: str = "metadata_reconciliation_tool_spark",
     master: str | None = None,
@@ -49,7 +61,10 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-warehouse"),

@@ -170,6 +170,39 @@ def test_arrow_scoring_udf_matches_pandas_twin():
             )
 
 
+def test_arrow_scoring_udf_all_null_side_and_chunked_args():
+    """A batch whose left names are ALL null dictionary-encodes to an
+    empty unique list; the bound's gather must still map the null sentinel
+    to the empty name instead of raising IndexError. Chunked arguments are
+    combined one by one, whichever of them arrives chunked. Values equal
+    the pandas twin's."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    from metadata_reconciliation_tool_spark.functions.similarity import (
+        make_scoring_batteries_arrow_udf,
+        make_scoring_batteries_udf,
+    )
+
+    ls = pa.array([None, None, None], type=pa.string())
+    rs = pa.array([None, "x y", "smith"], type=pa.string())
+    tlr = pa.chunked_array([[0.0], [0.0, 1.0]], type=pa.float64())
+    wc = pa.array([0.0, 0.0, 1.0], type=pa.float64())
+    boost = pa.array([None, 0.1, None], type=pa.float64())
+    got = make_scoring_batteries_arrow_udf(0.5).func(ls, rs, tlr, wc, boost)
+    want = make_scoring_batteries_udf(0.5).func(
+        ls.to_pandas(), rs.to_pandas(), tlr.to_pandas(), wc.to_pandas(),
+        boost.to_pandas(),
+    )
+    for col in ("jaro_winkler", "name_align", "na_ub", "pruned"):
+        g = pd.Series(got.field(col).to_numpy(zero_copy_only=False)).to_numpy(
+            dtype="float64", na_value=np.nan
+        )
+        w = want[col].to_numpy(dtype="float64", na_value=np.nan)
+        np.testing.assert_array_equal(g, w, err_msg=col)
+
+
 def test_vectorized_bound_dense_fallback_edges():
     """Round-6 dense evaluator edge paths: names with MORE distinct tokens
     than the dense slot width (_MAXD) must route to the exact scalar

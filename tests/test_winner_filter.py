@@ -3,7 +3,9 @@ bulk blocking paths must produce EXACTLY the frame the round-5
 ``dedup_pairs`` SortAggregate produced — same pairs, same winning
 (block_pass, block_key), same payload — including when ``self_candidates``
 drops oversized blocks (the winner must then be the best SURVIVING pass,
-which the per-entity surviving-key arrays encode)."""
+which the per-entity surviving-key arrays encode). The incremental batch
+path (``asymmetric_candidates``) must equal the same spec restricted to
+pairs that touch the batch."""
 
 from __future__ import annotations
 
@@ -14,6 +16,7 @@ from metadata_reconciliation_tool_spark.operators import blocking as B
 from metadata_reconciliation_tool_spark.operators.blocking import (
     _pass_keys,
     add_block_keys,
+    asymmetric_candidates,
     dedup_pairs,
     dictionary_candidates,
     self_candidates,
@@ -148,3 +151,26 @@ def test_winner_filter_keeps_exactly_one_row_per_pair(spark):
     pairs, _ = self_candidates(ents, 1000)
     got = [(r.left_key, r.right_key) for r in pairs.collect()]
     assert len(got) == len(set(got))
+
+
+def test_winner_filter_batch_path_matches_full_run_restricted(spark):
+    """The batch path runs the full run's body over the corpus restricted
+    to the blocks the batch emits: for cap 1000 and cap 3 it must equal the
+    full-run spec restricted to pairs with an endpoint in the batch (same
+    winner even when the cap drops a pair's best pass), oriented
+    left < right, with no pair-level aggregate left in its plan."""
+    rows = [(f"e{i:03d}", n, "person") for i, n in enumerate(_NAMES)]
+    ents = _keyed(spark, rows)
+    # every third entity: batch↔batch pairs, and corpus↔batch pairs with
+    # the corpus key on either side of the batch key
+    new_rows = rows[::3]
+    new_keys = [k for k, _, _ in new_rows]
+    new = _keyed(spark, new_rows)
+    for cap in (1000, 3):
+        got, _ = asymmetric_candidates(new, ents, cap)
+        want = _old_self(ents, cap).filter(
+            F.col("left_key").isin(new_keys) | F.col("right_key").isin(new_keys)
+        )
+        assert _assert_frames_equal(want, got) > 0
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "Aggregate(keys=[left_key" not in plan, plan
