@@ -141,6 +141,8 @@ class IncrementalRecon:
         # dictionary broadcast-gate verdicts (blocking.dict_broadcast_gate):
         # one probe per distinct dictionary plan, not one per ingest
         self._dict_broadcast: dict[int, bool] = {}
+        # state-table schemas, inferred once per instance (see _schema)
+        self._schemas: dict = {}
 
     def _read_job_config(self) -> dict:
         import json
@@ -300,34 +302,14 @@ class IncrementalRecon:
         cid = f"compact{n:06d}"
         cdir = self._batch_dir(cid)
         for name in ("entities_distinct", "scoring", "best"):
-            folded = self.spark.read.parquet(
-                *[os.path.join(self._batch_dir(b), name) for b in batch_ids]
+            self._read_batches(name, batch_ids).write.mode("overwrite").parquet(
+                os.path.join(cdir, name)
             )
-            folded.write.mode("overwrite").parquet(os.path.join(cdir, name))
         # clusters overlays fold latest-wins by each source dir's seq — the
         # consolidated delta holds exactly the rows the pre-fold reader
         # resolved from these dirs, so reads are identical before/after
-        delta_frames = []
-        for b in batch_ids:
-            p = os.path.join(self._batch_dir(b), "clusters_delta")
-            if W.stage_exists(self.spark, p):
-                delta_frames.append(
-                    W.read_stage(self.spark, p).withColumn(
-                        "_seq", F.lit(self._seq_of(b))
-                    )
-                )
-        if delta_frames:
-            from functools import reduce
-
-            from pyspark.sql import Window
-
-            alld = reduce(lambda a, c: a.unionByName(c), delta_frames)
-            w = Window.partitionBy("entity_key").orderBy(F.desc("_seq"))
-            resolved = (
-                alld.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .select("entity_key", "cluster_id")
-            )
+        resolved = self._resolved_overlays(batch_ids)
+        if resolved is not None:
             W.write_stage(resolved, os.path.join(cdir, "clusters_delta"))
         self.fs.write_text(
             os.path.join(cdir, "seq.json"),
@@ -363,30 +345,49 @@ class IncrementalRecon:
 
         self.fs.write_text(self._reflect_path(), json.dumps(sorted(batch_ids)))
 
+    def _schema(self, table: str):
+        """Schema of state table ``table`` (``entities_distinct``,
+        ``scoring``, ``best``, ``clusters``), inferred ONCE per instance
+        from its bootstrap stage. Every state read passes it to the parquet
+        reader, which then skips inference — each inferring read launched
+        its own one-task footer job, ~21 per ingest. Inference goes through
+        ``W.read_stage`` (ADVICE r4 low: a bare ``spark.read.parquet``
+        bypassed the ``_schema`` anchor fallback that write_stage creates
+        precisely for EMPTY partitioned stages — a zero-candidate bootstrap
+        made every subsequent read fail with an unable-to-infer-schema
+        error)."""
+        if table not in self._schemas:
+            self._schemas[table] = W.read_stage(
+                self.spark, self._stage(table)
+            ).schema
+        return self._schemas[table]
+
+    def _read(self, table: str, paths: list[str]) -> DataFrame:
+        """``paths`` as ONE scan under ``table``'s schema (no inference
+        job)."""
+        return self.spark.read.schema(self._schema(table)).parquet(*paths)
+
+    def _read_batches(self, name: str, batch_ids: list[str]) -> DataFrame:
+        return self._read(
+            name, [os.path.join(self._batch_dir(b), name) for b in batch_ids]
+        )
+
     def _read_state(self, name: str) -> DataFrame:
         """Bootstrap stage ∪ committed batch appends (uncommitted partial
         batch directories are invisible — the atomicity contract).
 
-        Each root is read separately and unioned by name: the bootstrap
-        scoring stage is partitioned by pair_kind (pipeline.py) while batch
-        dirs are flat, and Spark refuses a single multi-root read over
-        mixed/partitioned layouts; per-root reads also let a pair_kind
-        filter prune the bootstrap's partitions through the union.
-
-        The bootstrap root goes through ``W.read_stage`` (ADVICE r4 low: a
-        bare ``spark.read.parquet`` bypassed the ``_schema`` anchor fallback
-        that write_stage creates precisely for EMPTY partitioned stages — a
-        zero-candidate bootstrap made every subsequent read fail with an
-        unable-to-infer-schema error)."""
-        from functools import reduce
-
-        frames = [W.read_stage(self.spark, self._stage(name))] + [
-            self.spark.read.parquet(os.path.join(self._batch_dir(b), name))
-            for b in self.committed_batches()
-        ]
-        return reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=False), frames
-        )
+        Two scans unioned by name: the bootstrap scoring stage is
+        partitioned by pair_kind (pipeline.py) while batch dirs are flat,
+        and Spark refuses a single multi-root read over mixed/partitioned
+        layouts; the separate bootstrap scan also lets a pair_kind filter
+        prune its partitions through the union. Both read under
+        :meth:`_schema` (an empty partitioned bootstrap reads as an empty
+        frame: nothing left to infer)."""
+        root = self._read(name, [self._stage(name)])
+        batches = self.committed_batches()
+        if not batches:
+            return root
+        return root.unionByName(self._read_batches(name, batches))
 
     def ingest_batch(
         self,
@@ -410,7 +411,6 @@ class IncrementalRecon:
         would replace the committed dirs with empty frames — permanent state
         loss. Clusters are still healed if the crash also preceded the
         cluster refresh (the reflect sidecar records what they cover)."""
-        spark = self.spark
         self._cleanup_covered()
         if batch_id is None:
             # smallest unused id: never a committed or covered one (a covered
@@ -429,14 +429,7 @@ class IncrementalRecon:
             reflected = self._clusters_reflect()
             if reflected is None or set(committed) != set(reflected):
                 self._refresh_clusters(committed)
-            return {
-                "new_entities": spark.read.parquet(
-                    os.path.join(bdir, "entities_distinct")
-                ),
-                "new_scores": spark.read.parquet(os.path.join(bdir, "scoring")),
-                "new_best": spark.read.parquet(os.path.join(bdir, "best")),
-                "clusters": self.clusters_state(),
-            }
+            return self._batch_result(batch_id)
         if batch_id in self._covered():
             # redelivery of a batch that compaction has already folded away:
             # the batch IS fully applied (its rows live in the consolidated
@@ -454,17 +447,22 @@ class IncrementalRecon:
 
         old_distinct = self._read_state("entities_distinct")
 
-        batch_entities = E.extract_entities(transcripts_batch)
-        batch_distinct = E.distinct_entities(batch_entities)
-        new_distinct = batch_distinct.join(
+        # atomic append: batch sub-dirs first (overwrite = crash-rerun safe),
+        # commit marker only after all writes succeed. The unseen entities
+        # are written FIRST and everything downstream reads them back, so
+        # the batch extraction and seen-key anti-join run once (a lazy
+        # frame would re-run them per consumer)
+        batch_distinct = E.distinct_entities(E.extract_entities(transcripts_batch))
+        batch_distinct.join(
             old_distinct.select("entity_key"), "entity_key", "left_anti"
-        )
+        ).write.mode("overwrite").parquet(os.path.join(bdir, "entities_distinct"))
+        new_distinct = self._read_batches("entities_distinct", [batch_id])
 
         # materialize the batch's keyed frame ONCE (batch-scaled, like the
         # bootstrap's keyed entity frame): the dictionary join, the
         # broadcast-gate probe and the entity-pair body (block list, probe
         # flags, corpus union) all read it, and every read of the lazy
-        # frame re-ran the batch's extraction and key UDFs
+        # frame re-ran the key UDFs
         nkeyed = materialize(B.add_block_keys(new_distinct))
         # new ↔ dictionary ∪ new ↔ (old ∪ new), old↔old never materialized
         new_pairs, _dropped = P.build_candidate_pairs(
@@ -484,11 +482,6 @@ class IncrementalRecon:
             self.pruned_dict_top_k,
         )
 
-        # atomic append: batch sub-dirs first (overwrite = crash-rerun safe),
-        # commit marker only after all writes succeed
-        new_distinct.write.mode("overwrite").parquet(
-            os.path.join(bdir, "entities_distinct")
-        )
         new_scores.write.mode("overwrite").parquet(os.path.join(bdir, "scoring"))
         # best-match DELTA for the batch's new entities (round-4 verdict
         # item 2: stage_best went stale the moment a batch landed — every
@@ -500,8 +493,8 @@ class IncrementalRecon:
         # fused scoring UDF a second time), same shared plan + label gate
         # as the bootstrap stage (build_best_matches).
         batch_best = P.build_best_matches(
-            spark.read.parquet(os.path.join(bdir, "entities_distinct")),
-            spark.read.parquet(os.path.join(bdir, "scoring")).filter(
+            new_distinct,
+            self._read_batches("scoring", [batch_id]).filter(
                 F.col("pair_kind") == "dict"
             ),
             dictionary,
@@ -527,13 +520,16 @@ class IncrementalRecon:
             # folding it would hand the caller plans over vanished files
             self.compact(keep=[batch_id])
 
-        # return read-backs of the committed delta (not the compute plans:
-        # those lazily re-read the pre-batch state union, whose dirs a later
-        # compaction is free to delete)
+        return self._batch_result(batch_id)
+
+    def _batch_result(self, batch_id: str) -> dict:
+        """Read-backs of a committed batch's delta (not the compute plans:
+        those lazily re-read the pre-batch state union, whose dirs a later
+        compaction is free to delete) plus the current clusters."""
         return {
-            "new_entities": spark.read.parquet(os.path.join(bdir, "entities_distinct")),
-            "new_scores": spark.read.parquet(os.path.join(bdir, "scoring")),
-            "new_best": spark.read.parquet(os.path.join(bdir, "best")),
+            "new_entities": self._read_batches("entities_distinct", [batch_id]),
+            "new_scores": self._read_batches("scoring", [batch_id]),
+            "new_best": self._read_batches("best", [batch_id]),
             "clusters": self.clusters_state(),
         }
 
@@ -549,32 +545,39 @@ class IncrementalRecon:
         filtered with one anti-join against those keys (AQE broadcasts the
         small side); compaction folds overlays so the live overlay count
         stays O(auto_compact_every)."""
+        base = self._read("clusters", [self._stage("clusters")])
+        resolved = self._resolved_overlays(self.committed_batches())
+        if resolved is None:
+            return base
+        return base.join(
+            resolved.select("entity_key"), "entity_key", "left_anti"
+        ).unionByName(resolved)
+
+    def _resolved_overlays(self, batch_ids: list[str]) -> DataFrame | None:
+        """``batch_ids``' ``clusters_delta`` overlays resolved latest-wins
+        by each dir's ingest sequence (None if none has an overlay)."""
         from functools import reduce
 
         from pyspark.sql import Window
 
-        base = W.read_stage(self.spark, self._stage("clusters"))
         frames = []
-        for b in self.committed_batches():
+        for b in batch_ids:
             p = os.path.join(self._batch_dir(b), "clusters_delta")
             if W.stage_exists(self.spark, p):
                 frames.append(
-                    W.read_stage(self.spark, p).withColumn(
+                    self._read("clusters", [p]).withColumn(
                         "_seq", F.lit(self._seq_of(b))
                     )
                 )
         if not frames:
-            return base
+            return None
         alld = reduce(lambda a, c: a.unionByName(c), frames)
         w = Window.partitionBy("entity_key").orderBy(F.desc("_seq"))
-        resolved = (
+        return (
             alld.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select("entity_key", "cluster_id")
         )
-        return base.join(
-            resolved.select("entity_key"), "entity_key", "left_anti"
-        ).unionByName(resolved)
 
     def best_matches(self) -> DataFrame:
         """Corpus-wide best matches: bootstrap stage_best ∪ committed batch
@@ -610,9 +613,7 @@ class IncrementalRecon:
             if not missing:
                 self._write_clusters_reflect(committed)
                 return
-            unreflected = spark.read.parquet(
-                *[os.path.join(self._batch_dir(b), "scoring") for b in missing]
-            )
+            unreflected = self._read_batches("scoring", missing)
             new_edges = unreflected.filter(
                 (F.col("pair_kind") == "self") & F.col("is_match")
             ).select("left_key", "right_key")
@@ -639,12 +640,9 @@ class IncrementalRecon:
                 F.col("cluster_id").alias("right_key"),
             )
             comps = C.connected_components(stars.unionByName(new_edges))
-            batch_ents = spark.read.parquet(
-                *[
-                    os.path.join(self._batch_dir(b), "entities_distinct")
-                    for b in missing
-                ]
-            ).select("entity_key")
+            batch_ents = self._read_batches("entities_distinct", missing).select(
+                "entity_key"
+            )
             touched_entities = members.select("entity_key").unionByName(batch_ents)
             delta = C.assign_clusters(touched_entities, comps)
             W.write_stage(

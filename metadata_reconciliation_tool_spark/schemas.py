@@ -4,8 +4,14 @@ The reference keeps row-oriented Python objects + SQLite rows
 (Entity / MatchResult / ReconciliationResult / jobs / results / matches —
 /root/reference/app/services/reconciliation_engine.py:44-86,
 /root/reference/app/database.py:40-95). Here each becomes an explicit Spark
-schema so that (a) reads never rely on inference, (b) stage tables are
-stable contracts for idempotent resume.
+schema so that stage tables are stable contracts for idempotent resume.
+
+Where schemas come from on read: the streaming transcript source reads
+under :data:`TRANSCRIPTS`; the pipeline's own stage read-backs
+(``sources/writers.read_stage``) infer theirs from the parquet footers;
+incremental state reads (``plans/incremental.py``) infer each state table's
+schema once per ``IncrementalRecon`` from its bootstrap stage and pass it
+to every later read of that table, so batch-dir reads never infer.
 """
 
 from __future__ import annotations

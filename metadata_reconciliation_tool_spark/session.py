@@ -98,6 +98,19 @@ def build_session(
             "spark.sql.codegen.hugeMethodLimit",
             os.environ.get("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"),
         )
+        # generated-class cache, sized to the engine's working set. Spark's
+        # default of 100 entries is smaller than one ReconPipeline.run
+        # (172 distinct generated classes), and runs request them in the
+        # same cyclic order, so the LRU evicted every class just before it
+        # was needed again: 0% hit rate, 172 Janino compilations (plus a
+        # fresh JIT of each class) on every rerun. An ingest after a
+        # bootstrap needs 248 classes, 131 of them not shared with the
+        # bootstrap. 1000 leaves room for the compaction and
+        # connected-components plan shapes and for a test suite's single
+        # shared session. A static conf: it must be set before the session
+        # starts. An engine constant like hugeMethodLimit, not a data-size
+        # tune.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
